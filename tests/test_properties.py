@@ -15,6 +15,9 @@ checking the properties that matter most:
 
 from __future__ import annotations
 
+import functools
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -333,6 +336,46 @@ def test_parser_alternation_alternatives(preds):
     q = parse_sparql(f"select ?A ?B where {{ ?A {'|'.join(preds)} ?B }}")
     t = q.conditions[0].pred
     assert t.is_alternation and t.alternatives == tuple(preds)
+
+
+# ---------------------------------------------------------------------------
+# SPARQL front end on mutated corpus queries: every outcome is a ParsedQuery
+# or a SparqlSyntaxError whose position (when set) lies inside the text
+# ---------------------------------------------------------------------------
+_MUTATION_TOKEN = re.compile(r'<[^<>\s]*>|"[^"]*"|\?\w+|\|\||&&|!=|<=|>=|[\w:#@.-]+|\S')
+
+
+@functools.cache
+def _sparql_corpus_and_vocab() -> tuple[list[str], list[str]]:
+    from __spark_entry__ import SPARQL_QUERIES
+
+    corpus = [text for text, _ in SPARQL_QUERIES.values()]
+    vocab = {m.group() for q in corpus for m in _MUTATION_TOKEN.finditer(q)}
+    return corpus, sorted(vocab | set('{}().,;<>"^/|!'))
+
+
+@given(st.data())
+@settings(max_examples=500, deadline=None)
+def test_parser_mutated_queries_fail_only_with_positioned_errors(data):
+    from dream_spark.plans.sparql import ParsedQuery, SparqlSyntaxError, parse_sparql
+
+    corpus, vocab = _sparql_corpus_and_vocab()
+    text = data.draw(st.sampled_from(corpus))
+    for _ in range(data.draw(st.integers(1, 3))):
+        toks = list(_MUTATION_TOKEN.finditer(text))
+        if toks and data.draw(st.booleans()):  # delete a span of 1-4 tokens
+            i = data.draw(st.integers(0, len(toks) - 1))
+            j = data.draw(st.integers(i, min(len(toks) - 1, i + 3)))
+            text = text[: toks[i].start()] + text[toks[j].end() :]
+        else:  # insert one token at a token boundary
+            cut = data.draw(st.sampled_from([m.start() for m in toks] + [len(text)]))
+            text = f"{text[:cut]} {data.draw(st.sampled_from(vocab))} {text[cut:]}"
+    try:
+        assert isinstance(parse_sparql(text), ParsedQuery)
+    except SparqlSyntaxError as e:
+        if e.line is not None:
+            lines = text.split("\n")
+            assert 1 <= e.line <= len(lines) and 1 <= e.col <= len(lines[e.line - 1]) + 1
 
 
 # ---------------------------------------------------------------------------

@@ -57,11 +57,34 @@ def test_parse_distinct():
         "select ?Z where { ?A type Order }",
         "select a where { ?a type Order }",
         "select ?a where { }",
+        # integers Spark cannot hold as an int (limit/offset/substring)
+        "select ?a where { ?a type Order } limit 2147483648",
+        "select ?a where { ?a type Order } offset 2147483648",
+        'select ?a where { ?a name ?n . filter (substr(?n, 2147483648) = "x") }',
+        'select ?a where { ?a name ?n . filter (substr(?n, 1, 2147483648) = "x") }',
+        # empty IN list items
+        "select ?a where { ?a inNation ?n . filter (?n in (<a>,)) }",
+        "select ?a where { ?a inNation ?n . filter (?n in (<a>,,<b>)) }",
     ],
 )
 def test_parse_errors(bad):
     with pytest.raises(SparqlSyntaxError):
         parse_sparql(bad)
+
+
+@pytest.mark.parametrize(
+    "bad,line,col",
+    [
+        ("select ?a where {\n  ?a p <abc }", 2, 8),  # unterminated '<'
+        ("select ?a where { ?a p ?b", 1, 26),  # missing '}' (end of text)
+        ("select ?a where { ?a p ?b }\nlimit ten", 2, 7),  # non-integer limit
+    ],
+)
+def test_parse_error_positions(bad, line, col):
+    with pytest.raises(SparqlSyntaxError) as err:
+        parse_sparql(bad)
+    assert (err.value.line, err.value.col) == (line, col)
+    assert f"line {line}, column {col}" in str(err.value)
 
 
 # ---- end-to-end vs duckdb oracle -----------------------------------------
@@ -1626,6 +1649,9 @@ def test_parse_path_markers():
         "select ?X ?Y where { ?X |inNation ?Y }",    # malformed alternation
         "select ?X ?Y where { ?X in^Nation ?Y }",    # interior ^
         "select ?X ?Y where { ^?X inNation ?Y }",    # ^ on a non-predicate
+        "select ?X ?Y where { ?X ^ ?Y }",            # empty inverse step
+        "select ?X ?Y where { ?X ^/<q> ?Y }",        # empty step in a sequence
+        "select ?X ?Y where { ?X <p>/^ ?Y }",
     ]:
         with pytest.raises(SparqlSyntaxError):
             parse_sparql(bad)
