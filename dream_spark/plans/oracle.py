@@ -727,7 +727,7 @@ def _aggregate_sql(query: ParsedQuery, decode: bool, resolver) -> str:
             for j, v in enumerate(query.group_by, start=1)
         )
         sql = f"SELECT {dsel}\nFROM (\n{sql}\n) g\n{djoins}"
-    # restore select order (group vars then aliases = query.projection)
+    # restore select order (query.projection)
     sql = f"SELECT {', '.join(query.projection)} FROM (\n{sql}\n)"
     if query.order:
         sql += "\nORDER BY " + ", ".join(

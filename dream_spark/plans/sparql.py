@@ -61,7 +61,9 @@ Keywords are case-insensitive; ``[x]`` is optional, ``{x}`` repeats.
 
 Lexical rules.  ``<…>`` is an IRI only when closed with no whitespace
 inside, otherwise ``<`` is less-than (so ``?a < 5`` compares).  Strings
-are ``"…"`` without escapes.  Triple terms are whitespace-separated words;
+are ``"…"`` without escapes; a string constant stands for its unquoted
+lexical, as an IRI for the text inside ``<…>``, since the dictionary
+stores both bare.  Triple terms are whitespace-separated words;
 the tokens of one word, such as the path ``^placedBy/status``, are written
 without whitespace.  The terms between ``.`` separators form one triple
 (trailing dots are allowed); a clause (filter, optional, minus, values,
@@ -168,7 +170,7 @@ class Term:
       ``is_alternation`` both hold — the only combined form accepted
       (``(…)*`` / ``(…)?`` are rejected loudly).
 
-    ``lexical`` strips the path markers."""
+    ``lexical`` strips the path markers, IRI brackets and string quotes."""
 
     text: str
 
@@ -254,7 +256,8 @@ class Term:
             t = t[:-1]
         elif t.endswith("?") and not t.startswith("?"):
             t = t[:-1]
-        return t[1:-1] if t.startswith("<") and t.endswith(">") else t
+        quoted = t[:1] + t[-1:] in ("<>", '""') and len(t) > 1
+        return t[1:-1] if quoted else t
 
 
 @dataclass(frozen=True)
@@ -398,7 +401,7 @@ class ParsedQuery:
     # variables do NOT bind into the solution (unlike OPTIONAL).
     exists_groups: list[tuple[bool, list[Condition]]] = field(default_factory=list)
     # aggregate projection: group_by vars + Aggregate items; ``projection``
-    # then lists group_by vars followed by aggregate aliases, in select order
+    # then lists the group_by vars and aggregate aliases in select order
     aggregates: list[Aggregate] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
     # non-empty => the where clause is { branch } union { branch } …;
@@ -674,11 +677,11 @@ class _Parser:
 
     def const(self) -> str:
         """A constant operand as its lexical (an IRI loses its brackets, a
-        string keeps its quotes)."""
+        string its quotes)."""
         t = self.peek()
         if t.kind in ("iri", "name", "str"):
             self.next()
-            return t.text[1:-1] if t.kind == "iri" else t.text
+            return t.text[1:-1] if t.kind in ("iri", "str") else t.text
         if self.is_sint():
             return self.next().text + self.next().text
         raise self.error("expected a constant")
@@ -687,7 +690,7 @@ class _Parser:
     def query(self) -> ParsedQuery:
         t = self.next()
         form = t.text.lower() if t.kind == "name" else ""
-        star = (False, [], [], True)
+        star = (False, [], True)
         if form == "select":
             q = self.select()
         elif form == "ask":
@@ -709,7 +712,7 @@ class _Parser:
             q = replace(q, construct_template=tpl)
         elif form == "describe" and self.peek().kind == "var":
             var = self.take(self.var, "where")[0]
-            q = replace(self.body((False, [var], [], False), modifiers=False), describe_var=var)
+            q = replace(self.body((False, [var], False), modifiers=False), describe_var=var)
         elif form == "describe":
             q = ParsedQuery(projection=["s", "p", "o"], conditions=[], describe_term=self.const())
         else:
@@ -722,20 +725,19 @@ class _Parser:
     def select(self) -> ParsedQuery:
         """After ``select``; an empty projection means every variable."""
         distinct = self.accept("distinct") is not None
-        plain: list[str] = []
-        aggregates: list[Aggregate] = []
+        items: list[str | Aggregate] = []  # variables and aggregates, in select order
         star = False
         while not self.accept("where"):
             if self.accept("*"):
                 star = True
             elif self.accept("("):
-                aggregates.append(self.aggregate())
+                items.append(self.aggregate())
             elif self.peek().kind == "var":
                 v = self.var()
-                plain += [v] if v not in plain else []
+                items += [v] if v not in items else []
             else:
                 raise self.error("projection terms must be variables, '*' or (aggregate as ?alias)")
-        return self.body((distinct, plain, aggregates, star), modifiers=True)
+        return self.body((distinct, items, star), modifiers=True)
 
     def body(self, head: tuple, modifiers: bool) -> ParsedQuery:
         g = _Group()
@@ -1180,8 +1182,10 @@ def parse_sparql(text: str) -> ParsedQuery:
 
 def _assemble(head: tuple, g: _Group, mods: tuple) -> ParsedQuery:
     """Number the patterns and run the checks that need the whole query."""
-    distinct, plain, aggregates, star = head
+    distinct, items, star = head
     group_by, having, order, limit, offset = mods
+    plain = [x for x in items if isinstance(x, str)]
+    aggregates = [x for x in items if isinstance(x, Aggregate)]
     projection = [] if star else plain
     if aggregates:
         aliases = [a.alias for a in aggregates]
@@ -1199,7 +1203,7 @@ def _assemble(head: tuple, g: _Group, mods: tuple) -> ParsedQuery:
         ):
             if bad:
                 raise SparqlSyntaxError(msg)
-        projection = plain + aliases
+        projection = [x if isinstance(x, str) else x.alias for x in items]
     elif group_by:
         raise SparqlSyntaxError("group by requires at least one aggregate projection")
     elif having is not None:

@@ -126,6 +126,44 @@ def test_unknown_constant_empty(engine):
     assert engine.sparql("select ?a where { ?a type <NoSuchThing> }").count() == 0
 
 
+def test_parse_quoted_constants_are_unquoted():
+    """A quoted string constant resolves to its bare lexical wherever a
+    constant can stand; string-function arguments are strings already."""
+    q = parse_sparql(
+        'select ?X where { ?X name "abc" . filter (?X = "abc") . filter (?X in ("abc", <d>))'
+        ' values ?X { "abc" } }'
+    )
+    assert q.conditions[0].obj.lexical == "abc"
+    assert sorted((f.kind, f.rhs_const or f.consts) for f in q.filters) == [
+        ("cmp", "abc"), ("in", ("abc",)), ("in", ("abc", "d"))
+    ]
+    q = parse_sparql('select ?X ?Y where { ?X name ?Y . values (?X ?Y) { (<a> "b c") } }')
+    assert q.filters[0].rows == (("a", "b c"),)
+    q = parse_sparql('select ?X where { ?X name ?Y . filter contains(?Y, "a") }')
+    assert q.filters[0].pattern == "a"
+
+
+def test_quoted_name_constant_matches(engine, duck):
+    """``?C name "Customer#000000001"`` finds customer 1 (the dictionary
+    stores name literals unquoted), as a pattern and as a filter."""
+    from dream_spark.sources.triples import DICT_SQL, UNKNOWN_ID, resolve_lexical
+
+    def resolve(lex):
+        rid = resolve_lexical(lex)
+        if rid is None:
+            row = duck.execute(f"SELECT id FROM ({DICT_SQL}) WHERE lexical = ?", [lex]).fetchone()
+            rid = row[0] if row else UNKNOWN_ID
+        return rid
+
+    for qtext in (
+        'select ?C where { ?C name "Customer#000000001" }',
+        'select ?C where { ?C name ?NM . filter (?NM = "Customer#000000001") }',
+    ):
+        df = engine.sparql(qtext, decode=True)
+        assert [tuple(r) for r in df.collect()] == [("customer:1",)]
+        assert_oracle_match(df, duck, bgp_to_sql(parse_sparql(qtext), decode=True, resolver=resolve))
+
+
 # ---- planner behavior -----------------------------------------------------
 def test_greedy_order_starts_selective(engine):
     """The constant-object pattern (placedBy <customer:1>) must be joined
@@ -528,6 +566,19 @@ def test_parse_aggregates():
     assert q.projection == ["N", "cnt"]
 
 
+def test_parse_aggregate_projection_keeps_select_order():
+    q = parse_sparql(
+        "select (count(?C) as ?cnt) ?N where { ?C inNation ?N } group by ?N"
+    )
+    assert q.projection == ["cnt", "N"]
+    q = parse_sparql(
+        "select (count(?C) as ?a) ?N (count(distinct ?C) as ?b)"
+        " where { ?C inNation ?N } group by ?N"
+    )
+    assert q.projection == ["a", "N", "b"]
+    assert [a.alias for a in q.aggregates] == ["a", "b"]
+
+
 @pytest.mark.parametrize(
     "bad",
     [
@@ -561,6 +612,10 @@ def test_parse_aggregate_errors(bad):
         ),
         (
             "select ?N (count(?C) as ?cnt) where { ?C type Customer . ?C inNation ?N } group by ?N",
+            True,
+        ),
+        (
+            "select (count(?C) as ?cnt) ?N where { ?C type Customer . ?C inNation ?N } group by ?N",
             True,
         ),
         (

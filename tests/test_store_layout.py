@@ -3,12 +3,86 @@ and partition pruning — the §1/§M6 scale layout, evidenced in the plan."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dream_spark.plans.sparql import parse_sparql
 from dream_spark.plans.translator import translate
-from dream_spark.sources.triples import TripleStore
+from dream_spark.sources.triples import DICT_SQL, TRIPLES_SQL, TripleStore, open_partitions
 from tests.conftest import SF_DIR
+
+MB = 1024 * 1024
+
+
+@pytest.mark.parametrize(
+    "current,parallelism,est_bytes,expect",
+    [
+        (24, 4, 2 * MB, 4),  # small frame: one partition per core
+        (24, 4, 0, 4),  # an empty estimate never goes below the cores
+        (3, 4, 2 * MB, 3),  # never more partitions than the frame has
+        (3, 4, 10**12, 3),
+        (500, 4, 10 * 128 * MB + 1, 11),  # past the cores: one per 128 MB slice
+        (500, 4, 4 * 128 * MB, 4),
+        (8, 4, 10 * 128 * MB, 8),
+    ],
+)
+def test_open_partitions_rule(current, parallelism, est_bytes, expect):
+    assert open_partitions(current, parallelism, est_bytes, 128 * MB) == expect
+
+
+def _layout(spark, sql):
+    """``sql`` run uncached: its partition count, its fingerprint, and the
+    partition count the sizing rule gives it."""
+    raw = spark.sql(sql)
+    parts = raw.rdd.getNumPartitions()
+    n = open_partitions(
+        parts,
+        spark.sparkContext.defaultParallelism,
+        int(raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes(),
+    )
+    return parts, _fingerprint(raw), n
+
+
+def _fingerprint(df):
+    """Row count and sum(xxhash64(row)) — equal for equal multisets."""
+    h = F.xxhash64(*df.columns).cast("decimal(38,0)")
+    return tuple(df.agg(F.count(F.lit(1)), F.sum(h)).collect()[0])
+
+
+def test_open_store_is_coalesced_to_cluster_size(spark):
+    """The cached triples and dictionary hold exactly the partitions of the
+    sizing rule — also after clearCache + ensure_open — and the same rows
+    as the uncached derivation."""
+    st = TripleStore.from_tpch(spark, SF_DIR, cache=True)
+    try:
+        expect = {}
+        for name, sql in (("triples", TRIPLES_SQL), ("dictionary", DICT_SQL)):
+            raw_parts, raw_print, n = _layout(spark, sql)
+            assert n < raw_parts  # the test data has more branches than cores
+            expect[name] = n
+            assert _fingerprint(getattr(st, name)) == raw_print, name
+
+        def parts():
+            return {name: getattr(st, name).rdd.getNumPartitions() for name in expect}
+
+        assert parts() == expect
+        spark.catalog.clearCache()
+        st.ensure_open()
+        for name in expect:
+            lvl = getattr(st, name).storageLevel
+            assert lvl.useMemory or lvl.useDisk, name
+        assert parts() == expect
+    finally:
+        st.triples.unpersist()
+        st.dictionary.unpersist()
+
+
+def test_uncached_store_keeps_derivation_partitioning(spark):
+    st = TripleStore.from_tpch(spark, SF_DIR, cache=False)
+    for df, sql in ((st.triples, TRIPLES_SQL), (st.dictionary, DICT_SQL)):
+        assert df.rdd.getNumPartitions() == spark.sql(sql).rdd.getNumPartitions()
+        assert "Coalesce" not in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_partitioned_roundtrip_and_pruning(spark, engine, tmp_path):
