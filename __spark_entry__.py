@@ -636,6 +636,57 @@ def _engine(spark: SparkSession, sf_dir: str):
     return _ENGINES[key]
 
 
+def warm_serving_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Bring a session to the warm state the bench measures against: the
+    engine (triples view + stats), a forked Arrow worker pool, then the
+    pre-serving artifacts built concurrently.
+
+    The six artifact families share no inputs, and Spark schedules jobs
+    submitted from separate driver threads onto the same executor pool, so
+    the wall cost is the slowest build, not the sum.  Returns the seconds
+    each step took (artifact builds overlap, so those do not add up)."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dream_spark.operators.dedup import warm_minhash_index
+    from dream_spark.operators.graph import warm_graph_artifacts
+    from dream_spark.operators.similarity import warm_vector_indexes
+    from dream_spark.operators.text import shared_hbow, warm_postings_index
+    from dream_spark.streaming.events import warm_live_streams
+
+    def timed(fn, *args) -> float:
+        t0 = time.perf_counter()
+        fn(*args)
+        return round(time.perf_counter() - t0, 3)
+
+    par = spark.sparkContext.defaultParallelism
+    out = {
+        "engine": timed(_engine, spark, sf_dir),
+        # executors of a deployed engine hold warm reusable Python workers
+        # (spark.python.worker.reuse): fork and import them once
+        "arrow_workers": timed(
+            lambda: spark.range(par * 4).repartition(par).mapInPandas(
+                lambda it: it, schema="id long"
+            ).count()
+        ),
+    }
+    artifacts = {
+        # quantized corpus, LSH buckets, IVF centroids, persisted serve index
+        "vector_indexes": warm_vector_indexes,
+        # entity edges + degrees, co-purchase adjacency
+        "graph_artifacts": warm_graph_artifacts,
+        # the hashed-BoW corpus frame text_knn/hybrid_search score against
+        "hbow": shared_hbow,
+        "postings_index": warm_postings_index,
+        "live_streams": warm_live_streams,
+        "minhash_index": warm_minhash_index,
+    }
+    with ThreadPoolExecutor(max_workers=len(artifacts)) as pool:
+        futs = {name: pool.submit(timed, fn, spark, sf_dir) for name, fn in artifacts.items()}
+        out.update({name: f.result() for name, f in futs.items()})
+    return out
+
+
 def _sparql_runner(text: str, decode: bool) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _engine(spark, sf_dir).sparql(text, decode=decode)

@@ -33,12 +33,6 @@ DEFAULT_BROADCAST_MAX_ROWS = 1_000_000
 CC_SMALL_EDGES_CONF = "spark.dream_spark.cc.smallEdges"
 DEFAULT_CC_SMALL_EDGES = 2_000_000
 
-# First min-label round that also pointer-doubles (1 = double from the
-# first round).  Doubling is an accelerator — an extra label-keyed join
-# per round that cuts total rounds to O(log diameter); the right start
-# round depends on the graph's diameter, so it is conf-overridable.
-CC_DOUBLE_FROM_CONF = "spark.dream_spark.cc.doubleFrom"
-
 
 def conf_int(spark: SparkSession, key: str, default: int) -> int:
     try:

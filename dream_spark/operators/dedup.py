@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from dream_spark.functions.features import duck_shingle_ids_cte, duck_token_ngram_ids_cte
 from dream_spark.functions.hashing import hash_sql
 from dream_spark.functions.joins import (
-    CC_DOUBLE_FROM_CONF,
     CC_SMALL_EDGES_CONF,
     DEFAULT_CC_SMALL_EDGES,
     broadcast_if_small,
@@ -942,7 +941,6 @@ def connected_components(
         # driver GC (r9: resident checkpoint blocks taxed the next
         # same-session iterative job 1.5-2x at the 100x decade)
         labels_ckpt = labels
-        double_from = conf_int(spark, CC_DOUBLE_FROM_CONF, _CC_DOUBLE_FROM)
         converged = n_changed == 0
         for it in range(1, _CC_MAX_ITERS + 1):
             if converged:
@@ -978,7 +976,7 @@ def connected_components(
                 labels, labels_ckpt = half, half
                 converged = True
                 break
-            if it < double_from:
+            if it < _CC_DOUBLE_FROM:
                 merged = half
             else:
                 # pointer doubling: label ← label(label).  Neighbor-min
@@ -991,7 +989,7 @@ def connected_components(
                 # checkpointed frame, so the subtree is never computed
                 # twice.  Labels stay monotone min-reachable ids, so
                 # plain coalesce (no least) is exact.  Doubling is purely
-                # an ACCELERATOR, so the first double_from rounds
+                # an ACCELERATOR, so the first _CC_DOUBLE_FROM rounds
                 # skip it: low-diameter graphs (the near-dup clique case)
                 # break the loop on neighbor-min alone without paying the
                 # extra join + checkpoint per round.  After a doubled

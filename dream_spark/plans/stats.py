@@ -242,12 +242,12 @@ class TripleStats:
         m = st.mult_s if slot == "s" else st.mult_o
         return m if m > 0 else None
 
-    def exact_pattern_bound(self, pred_id: int, o_id: int | None = None) -> int | None:
-        """EXACT upper bound on a pattern scan's row count, or None when no
-        exact figure exists: the per-(pred, obj) count when the scan's
-        object slot is bound and obj_counts covers the predicate, else the
-        predicate total.  This is what the translator's broadcast gate
-        keys on — never an independence estimate."""
+    def exact_pattern_bound(self, pred_id: int, o_id: int | None = None) -> int:
+        """EXACT upper bound on a pattern scan's row count: the
+        per-(pred, obj) count when the scan's object slot is bound and
+        obj_counts covers the predicate, else the predicate total (0 for a
+        predicate absent from the stats).  This is what the translator's
+        broadcast gate keys on — never an independence estimate."""
         st = self.per_pred.get(pred_id)
         if st is None:
             return 0

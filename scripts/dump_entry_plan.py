@@ -28,25 +28,7 @@ def main() -> None:
 
     spark = get_spark("dump_entry_plan")
     qs = entrymod.queries()
-    entrymod._engine(spark, args.sf_dir)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from dream_spark.operators.dedup import warm_minhash_index
-    from dream_spark.operators.graph import warm_graph_artifacts
-    from dream_spark.operators.similarity import warm_vector_indexes
-    from dream_spark.operators.text import shared_hbow, warm_postings_index
-    from dream_spark.streaming.events import warm_live_streams
-
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        for f in [
-            pool.submit(warm_vector_indexes, spark, args.sf_dir),
-            pool.submit(warm_graph_artifacts, spark, args.sf_dir),
-            pool.submit(shared_hbow, spark, args.sf_dir),
-            pool.submit(warm_postings_index, spark, args.sf_dir),
-            pool.submit(warm_live_streams, spark, args.sf_dir),
-            pool.submit(warm_minhash_index, spark, args.sf_dir),
-        ]:
-            f.result()
+    entrymod.warm_serving_artifacts(spark, args.sf_dir)
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in args.names.split(","):

@@ -133,20 +133,11 @@ SELECT vec_id + {k * SHIFT['vec_id']} AS vec_id,
 def _measure_names(sf_dir: str, names: list[str]) -> dict[str, float]:
     import __spark_entry__ as entrymod
     from dream_spark import get_spark
-    from dream_spark.operators.dedup import warm_minhash_index
-    from dream_spark.operators.graph import warm_graph_artifacts
-    from dream_spark.operators.similarity import warm_vector_indexes
-    from dream_spark.operators.text import shared_hbow, warm_postings_index
 
     spark = get_spark("scale-probe")
     try:
         qs = entrymod.queries()
-        entrymod._engine(spark, sf_dir)
-        warm_vector_indexes(spark, sf_dir)
-        warm_graph_artifacts(spark, sf_dir)
-        shared_hbow(spark, sf_dir)
-        warm_postings_index(spark, sf_dir)
-        warm_minhash_index(spark, sf_dir)
+        entrymod.warm_serving_artifacts(spark, sf_dir)
         out = {}
         for name in names:
             t0 = time.perf_counter()

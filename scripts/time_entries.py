@@ -7,7 +7,8 @@ Usage:
   python scripts/time_entries.py name1,name2,... [--n 3] [--sf-dir DIR]
   python scripts/time_entries.py --top 15 --from BENCH_LAST.json [--n 3]
 
-Prints one JSON line {"entries": {name: {"min": s, "runs": [...]}}, ...}.
+Prints one JSON line {"entries": {name: {"min": s, "runs": [...]}},
+"setup_sec": s, "setup_steps_sec": {step: s}, "sf_dir": DIR}.
 """
 
 from __future__ import annotations
@@ -56,29 +57,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown entries: {unknown}")
 
-    # bench-identical warm pass
-    entrymod._engine(spark, args.sf_dir)
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, schema="id long").count()
-    from concurrent.futures import ThreadPoolExecutor
-
-    from dream_spark.operators.dedup import warm_minhash_index
-    from dream_spark.operators.graph import warm_graph_artifacts
-    from dream_spark.operators.similarity import warm_vector_indexes
-    from dream_spark.operators.text import shared_hbow, warm_postings_index
-    from dream_spark.streaming.events import warm_live_streams
-
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        for f in [
-            pool.submit(warm_vector_indexes, spark, args.sf_dir),
-            pool.submit(warm_graph_artifacts, spark, args.sf_dir),
-            pool.submit(shared_hbow, spark, args.sf_dir),
-            pool.submit(warm_postings_index, spark, args.sf_dir),
-            pool.submit(warm_live_streams, spark, args.sf_dir),
-            pool.submit(warm_minhash_index, spark, args.sf_dir),
-        ]:
-            f.result()
+    setup_steps = entrymod.warm_serving_artifacts(spark, args.sf_dir)
     setup = time.perf_counter() - t0
 
     out: dict[str, dict] = {}
@@ -91,7 +70,16 @@ def main() -> None:
             runs.append(round(time.perf_counter() - t1, 4))
             print(f"# {name}: {runs[-1]:.3f}s rows={n_rows}", file=sys.stderr)
         out[name] = {"min": min(runs), "runs": runs}
-    print(json.dumps({"entries": out, "setup_sec": round(setup, 2), "sf_dir": args.sf_dir}))
+    print(
+        json.dumps(
+            {
+                "entries": out,
+                "setup_sec": round(setup, 2),
+                "setup_steps_sec": setup_steps,
+                "sf_dir": args.sf_dir,
+            }
+        )
+    )
     spark.stop()
 
 

@@ -272,6 +272,75 @@ def test_filter_ordering_comparisons(engine, duck):
         assert got == want, op
 
 
+_COMPARISON_SITES = {
+    # row FILTER on encoded ids
+    "row": "select ?C where {{ ?C type Customer . filter (?C {op} <customer:10>) }}",
+    # STRLEN over the decoded lexical (nation names are 8 or 9 characters)
+    "strlen": (
+        "select ?N ?NM where {{ ?N type Nation . ?N name ?NM ."
+        " filter (strlen(?NM) {op} 8) }}"
+    ),
+    # optional-group filters on an OUTER variable join the left-join
+    # condition: an id comparison, and a typed-value arithmetic one
+    "optional_cross": (
+        "select ?C ?N ?O where {{ ?C type Customer . ?C inNation ?N ."
+        " optional {{ ?O placedBy ?C . filter (?N {op} <nation:5>) }} }}"
+    ),
+    "optional_cross_arith": (
+        "select ?P ?SZ ?L where {{ ?P type Part . ?P size ?SZ ."
+        " optional {{ ?L ofPart ?P . filter (?SZ {op} 25) }} }}"
+    ),
+    # HAVING on the aggregate (customers per nation run 3..13)
+    "having": (
+        "select ?N (count(?C) as ?cnt) where {{ ?C type Customer . ?C inNation ?N }}"
+        " group by ?N having (count(?C) {op} 6)"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", ["=", "!=", "<", "<=", ">", ">="])
+@pytest.mark.parametrize("site", sorted(_COMPARISON_SITES))
+def test_comparison_operators_oracle(engine, duck, site, op):
+    qtext = _COMPARISON_SITES[site].format(op=op)
+    q = parse_sparql(qtext)
+    assert_oracle_match(engine.sparql(qtext), duck, bgp_to_sql(q))
+
+
+@pytest.mark.parametrize(
+    "qtext,id_cols",
+    [
+        ("describe <customer:1>", ("s", "p", "o")),
+        (
+            "construct { ?C inNation ?N . ?C type Customer } "
+            "where { ?C type Customer . ?C inNation ?N }",
+            ("s", "p", "o"),
+        ),
+        (
+            "select ?N (count(?C) as ?cnt) where { ?C type Customer . ?C inNation ?N }"
+            " group by ?N",
+            ("N",),
+        ),
+    ],
+    ids=["describe", "construct", "group_by"],
+)
+def test_decoded_rows_are_undecoded_rows_through_dict(engine, duck, qtext, id_cols):
+    """decode=True equals the oracle's undecoded rows with each id column
+    mapped through the DuckDB dictionary (ids are unique there)."""
+    from dream_spark.sources.triples import DICT_SQL
+
+    lex = dict(duck.execute(f"SELECT id, lexical FROM ({DICT_SQL})").fetchall())
+    res = duck.execute(bgp_to_sql(parse_sparql(qtext)))
+    cols = [c[0] for c in res.description]
+    want = [
+        tuple(lex.get(v) if c in id_cols else v for c, v in zip(cols, row))
+        for row in res.fetchall()
+    ]
+    df = engine.sparql(qtext, decode=True)
+    assert df.columns == cols
+    got = [tuple(r) for r in df.collect()]
+    assert want and sorted(got, key=repr) == sorted(want, key=repr)
+
+
 # ---- ORDER BY / LIMIT superset --------------------------------------------
 def test_order_by_limit_parse():
     q = parse_sparql("select ?A ?B where { ?A placedBy ?B } order by ?A desc ?B limit 7")
